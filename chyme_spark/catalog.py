@@ -19,7 +19,7 @@ Fixes baked in (SURVEY §2A quirks list):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from chyme_spark.filters import compile_filter
@@ -51,51 +51,20 @@ def with_resource_columns(urls: DataFrame, phony: bool = False) -> DataFrame:
     )
 
 
+def is_well_formed() -> Column:
+    """Needs a scheme and a non-empty key. NULL urls yield NULL
+    predicates, and a plain filter/~filter pair drops NULL rows from
+    BOTH sides — the exact silent-vanish quarantine exists to prevent;
+    coalesce pins them to quarantine (round-6 review)."""
+    return F.coalesce((F.col("scheme") != "") & (F.col("key") != ""), F.lit(False))
+
+
 def split_malformed(catalog: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(well-formed, quarantine) — needs a scheme and a non-empty key.
-
-    NULL urls yield NULL predicates, and a plain filter/~filter pair
-    drops NULL rows from BOTH outputs — the exact silent-vanish this
-    function exists to prevent; coalesce pins them to quarantine
-    (round-6 review)."""
-    is_valid = F.coalesce(
-        (F.col("scheme") != "") & (F.col("key") != ""), F.lit(False)
-    )
-    return catalog.filter(is_valid), catalog.filter(~is_valid)
+    """(well-formed, quarantine) — see :func:`is_well_formed`."""
+    return catalog.filter(is_well_formed()), catalog.filter(~is_well_formed())
 
 
-def list_files(spark, root: str, max_depth: int | None = None) -> DataFrame:
-    """Recursive object listing -> (url, size, mtime) DataFrame.
-
-    Parity with the reference's BFS lister (ref ``pkg/aws/s3.go:63-80``,
-    ``311-338``) including its ``--recursion`` depth bound — but with
-    correct pagination (Hadoop FS iterators page internally; the
-    reference dropped its ContinuationToken, ref ``pkg/aws/s3.go:344-356``).
-
-    Listing runs on the driver (it is metadata, same as Spark's own file
-    index); for buckets with millions of prefixes use
-    :func:`list_files_distributed`, which fans the per-prefix recursion
-    out to executors.
-    """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(conf)
-    # depth must be measured against the HADOOP-rendered path: the
-    # caller's 'file:///tmp/x' renders as 'file:/tmp/x' in results, and
-    # counting the raw root's slashes would loosen max_depth by 2
-    # (round-6 review)
-    base_depth = fs.makeQualified(path).toString().rstrip("/").count("/")
-    rows = []
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        if max_depth is not None and (p.count("/") - base_depth - 1) > max_depth:
-            continue
-        rows.append((p, st.getLen(), st.getModificationTime()))
-    return spark.createDataFrame(rows, "url string, size long, mtime long")
+LISTING_SCHEMA = "url string, size long, mtime long"
 
 
 def _resolve_fs(url: str, s3_options: dict | None = None):
@@ -115,6 +84,59 @@ def _resolve_fs(url: str, s3_options: dict | None = None):
     return pafs.FileSystem.from_uri(url)
 
 
+def _resolve_root(root: str, s3_options: dict | None = None):
+    """(scheme, filesystem, base path) of a listing root. Plain and
+    relative paths and Hadoop's ``file:/x`` rendering are local files,
+    resolved against the cwd the way Hadoop's ``Path`` resolves them."""
+    import os
+
+    if "://" not in root:
+        root = f"file://{os.path.abspath(root.removeprefix('file:'))}"
+    fs, base = _resolve_fs(root, s3_options)
+    return root.split("://", 1)[0], fs, base.rstrip("/")
+
+
+def _file_rows(infos, scheme: str, base_depth: int, max_depth: int | None):
+    """(url, size, mtime) of the files among pyarrow ``FileInfo``s that sit
+    at most ``max_depth`` levels below a root with ``base_depth``
+    slashes — the one depth rule of every lister."""
+    from pyarrow import fs as pafs
+
+    for i in infos:
+        if i.type != pafs.FileType.File:
+            continue
+        if max_depth is not None and (i.path.count("/") - base_depth - 1) > max_depth:
+            continue
+        # some filesystems omit mtimes; FileInfo.mtime_ns is then None
+        mtime = i.mtime_ns // 1_000_000 if i.mtime_ns is not None else None
+        yield f"{scheme}://{i.path}", i.size, mtime
+
+
+def list_files(spark, root: str, max_depth: int | None = None) -> DataFrame:
+    """Recursive object listing -> (url, size, mtime) DataFrame.
+
+    Parity with the reference's BFS lister (ref ``pkg/aws/s3.go:63-80``,
+    ``311-338``) including its ``--recursion`` depth bound — but with
+    correct pagination (``pyarrow.fs`` pages internally; the reference
+    dropped its ContinuationToken, ref ``pkg/aws/s3.go:344-356``). A file
+    root lists that one file; a missing root raises FileNotFoundError.
+
+    Listing runs on the driver in ``pyarrow.fs`` (it is metadata, same as
+    Spark's own file index), with no per-object JVM gateway call; for
+    buckets with millions of prefixes use :func:`list_files_distributed`.
+    """
+    from pyarrow import fs as pafs
+
+    scheme, fs, base = _resolve_root(root)
+    infos = [fs.get_file_info(base)]
+    if infos[0].type == pafs.FileType.NotFound:
+        raise FileNotFoundError(f"listing root not found: {root}")
+    if infos[0].type == pafs.FileType.Directory:
+        infos = fs.get_file_info(pafs.FileSelector(base, recursive=True))
+    rows = list(_file_rows(infos, scheme, base.count("/"), max_depth))
+    return spark.createDataFrame(rows, LISTING_SCHEMA)
+
+
 def list_files_distributed(
     spark, root: str, max_depth: int | None = None, fanout_partitions: int = 64,
     s3_options: dict | None = None,
@@ -127,33 +149,22 @@ def list_files_distributed(
     ``pkg/aws/s3.go:326-337`` — errgroup over prefixes); at 100 M
     objects the driver-side iterator is the bottleneck, here the driver
     touches one page of first-level entries and each executor recurses
-    one prefix. Uses ``pyarrow.fs`` rather than the Hadoop FS API
-    because executors' Python workers have no JVM gateway; both resolve
-    the same schemes for file/s3/hdfs. ``s3_options`` binds explicit
-    object-store credentials/endpoint into the executor closures (the
-    env chain is invisible to already-running Python workers).
+    one prefix. Executors' Python workers have no JVM gateway, so both
+    listers use ``pyarrow.fs`` for file/s3/hdfs. ``s3_options`` binds
+    explicit object-store credentials/endpoint into the executor
+    closures (the env chain is invisible to already-running Python
+    workers).
     """
     import pandas as pd
     from pyarrow import fs as pafs
 
-    scheme = root.split("://", 1)[0] if "://" in root else "file"
-    fs, base = _resolve_fs(root if "://" in root else f"file://{root}", s3_options)
-    base = base.rstrip("/")
+    scheme, fs, base = _resolve_root(root, s3_options)
     base_depth = base.count("/")
 
     top = fs.get_file_info(pafs.FileSelector(base, recursive=False))
     dir_prefixes = [f"{scheme}://{i.path}" for i in top if i.type == pafs.FileType.Directory]
-    def _mtime_ms(info):
-        # some filesystems omit mtimes; FileInfo.mtime_ns is then None
-        return info.mtime_ns // 1_000_000 if info.mtime_ns is not None else None
-
-    top_files = [
-        (f"{scheme}://{i.path}", i.size, _mtime_ms(i))
-        for i in top
-        if i.type == pafs.FileType.File
-    ]
-    schema = "url string, size long, mtime long"
-    files_df = spark.createDataFrame(top_files, schema)
+    files_df = spark.createDataFrame(list(_file_rows(top, scheme, base_depth, max_depth)),
+                                     LISTING_SCHEMA)
     if not dir_prefixes:
         return files_df
 
@@ -168,29 +179,30 @@ def list_files_distributed(
             for prefix in pdf["prefix"]:
                 if cached_fs is None:
                     cached_fs, _ = _resolve_fs(prefix, s3_options)
-                pfs = cached_fs
                 ppath = prefix.split("://", 1)[1].rstrip("/")
-                for i in pfs.get_file_info(pafs.FileSelector(ppath, recursive=True)):
-                    if i.type != pafs.FileType.File:
-                        continue
-                    if max_depth is not None and (i.path.count("/") - base_depth - 1) > max_depth:
-                        continue
-                    rows.append((f"{scheme}://{i.path}", i.size, _mtime_ms(i)))
+                infos = cached_fs.get_file_info(pafs.FileSelector(ppath, recursive=True))
+                rows.extend(_file_rows(infos, scheme, base_depth, max_depth))
             yield pd.DataFrame(rows, columns=["url", "size", "mtime"])
 
     prefixes = spark.createDataFrame(
         [(p,) for p in dir_prefixes], "prefix string"
     ).repartition(min(len(dir_prefixes), fanout_partitions))
-    deep = prefixes.mapInPandas(list_prefixes, schema)
+    deep = prefixes.mapInPandas(list_prefixes, LISTING_SCHEMA)
     return files_df.unionByName(deep)
 
 
-def ingest(urls: DataFrame, filter_string: str = "identity/") -> DataFrame:
+def ingest(
+    urls: DataFrame, filter_string: str = "identity/", malformed: Observation | None = None
+) -> DataFrame:
     """scan -> predicate -> dedup, as one narrow-then-aggregate plan.
 
     The only shuffle is the dedup on ``url``; at scale that is a hash
     repartition of (short) URL strings, and AQE coalesces the output.
+    ``malformed`` observes the quarantine count (metric ``n``) over the
+    whole listing during the same pass, before the filter and the dedup.
     """
     catalog = with_resource_columns(urls)
+    if malformed is not None:
+        catalog = catalog.observe(malformed, F.count_if(~is_well_formed()).alias("n"))
     good, _quarantine = split_malformed(catalog)
     return good.filter(compile_filter(filter_string)).dropDuplicates(["url"])

@@ -18,16 +18,38 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from chyme_spark.session import get_spark
 
 
 def _read_or_none(spark, path: str):
+    """The table at ``path``, or None before its first write. Asks the
+    Hadoop FileSystem first: a failed read logs a JVM stack trace."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p):
+        return None
     try:
         return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first run: table doesn't exist yet
+    except Exception:  # noqa: BLE001 — exists but unreadable (e.g. no files yet)
         return None
+
+
+def _observed(obs: Observation) -> dict:
+    """``obs.get`` after its action. A plan the optimizer proves empty (an
+    empty listing) loses its observed node, and Spark then completes the
+    observation with an empty row ``Observation.get`` cannot convert."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
+def _write_counted(df, path: str) -> int:
+    """Append ``df`` to the parquet table at ``path``; returns the rows
+    written, observed on the write itself (one action, no cache)."""
+    written = Observation()
+    df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(path)
+    return _observed(written).get("n", 0)
 
 
 def _read_ledger_or_none(spark, path: str):
@@ -37,6 +59,26 @@ def _read_ledger_or_none(spark, path: str):
     one-row-per-task semantics (ADVICE r2)."""
     df = _read_or_none(spark, path)
     return None if df is None else df.dropDuplicates(["task_hash"])
+
+
+def _run_stream(stream, process, table: str, args) -> str:
+    """Run ``process`` per micro-batch of ``stream`` (checkpoint default
+    ``<table>_stream_ckpt``): drain once, or long-poll every
+    ``--follow-interval`` until ``--follow-duration``. Returns the mode."""
+    ckpt = args.follow_checkpoint or f"{table.rstrip('/')}_stream_ckpt"
+    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", ckpt)
+    interval = getattr(args, "follow_interval", None)
+    if interval:
+        writer = writer.trigger(processingTime=interval)
+    else:
+        writer = writer.trigger(availableNow=True)
+    q = writer.start()
+    duration = getattr(args, "follow_duration", None)
+    if duration is not None:
+        q.awaitTermination(duration)
+        q.stop()
+    q.awaitTermination()
+    return f"long-poll every {interval}" if interval else "stream drain"
 
 
 def _ingest_follow(spark, args) -> int:
@@ -75,30 +117,9 @@ def _ingest_follow(spark, args) -> int:
         existing = _read_or_none(spark, args.catalog)
         if existing is not None:
             catalog = catalog.join(existing.select("url"), "url", "left_anti")
-        catalog = catalog.cache()
-        counts["n"] += catalog.count()
-        catalog.write.mode("append").parquet(args.catalog)
-        catalog.unpersist()
+        counts["n"] += _write_counted(catalog, args.catalog)
 
-    ckpt = args.follow_checkpoint or f"{args.catalog.rstrip('/')}_stream_ckpt"
-    writer = (
-        rd.load()
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-    )
-    interval = getattr(args, "follow_interval", None)
-    writer = (
-        writer.trigger(processingTime=interval)
-        if interval
-        else writer.trigger(availableNow=True)
-    )
-    q = writer.start()
-    duration = getattr(args, "follow_duration", None)
-    if duration is not None:
-        q.awaitTermination(duration)
-        q.stop()
-    q.awaitTermination()
-    mode = f"long-poll every {interval}" if interval else "stream drain"
+    mode = _run_stream(rd.load(), process, args.catalog, args)
     print(f"cataloged {counts['n']} new resources ({mode})")
     return 0
 
@@ -117,13 +138,7 @@ def _ingest_once(
 
     Raises ValueError on a bad filter string — callers map it to their
     transport's error convention (exit code 2 / response err field)."""
-    from chyme_spark.catalog import (
-        ingest,
-        list_files,
-        list_files_distributed,
-        split_malformed,
-        with_resource_columns,
-    )
+    from chyme_spark import catalog as cat
     from chyme_spark.filters import compile_filter
 
     # building the Column requires an active session, so validate
@@ -136,35 +151,19 @@ def _ingest_once(
         # flag was silently ignored here — round-6 review)
         urls = spark.createDataFrame([(root,)], "url string")
     else:
-        lister = list_files_distributed if distributed_listing else list_files
+        lister = cat.list_files_distributed if distributed_listing else cat.list_files
         urls = lister(spark, root, recursion).select("url")
-    # cache the listing: consumed by both the catalog branch and the
-    # quarantine branch below — one listing pass, not two
-    urls = urls.cache()
-    catalog = None
-    try:
-        catalog = ingest(urls, filter_string)
-        # dedup against what's already cataloged (idempotent re-ingest)
-        existing = _read_or_none(spark, catalog_path)
-        if existing is not None:
-            catalog = catalog.join(existing.select("url"), "url", "left_anti")
-        # cache: count + write would otherwise execute listing+filter+dedup
-        # twice (2x a full scan at scale — VERDICT r1). The cached rows are
-        # catalog metadata (url/hash/ext), bounded, never the objects.
-        catalog = catalog.cache()
-        n = catalog.count()
-        catalog.write.mode("append").parquet(catalog_path)
-        _, quarantine = split_malformed(with_resource_columns(urls))
-        nq = quarantine.count()
-        return n, nq
-    finally:
-        # the `serve` loop calls this in a LONG-LIVED driver and maps
-        # failures to an HTTP err body — without the finally, every
-        # failed request would pin its cached DataFrames until process
-        # death (cache leak found in the round-6 review)
-        if catalog is not None and catalog.is_cached:
-            catalog.unpersist()
-        urls.unpersist()
+    # the listing runs once, inside the catalog write, and both counts
+    # ride that write as observed metrics — the malformed count over the
+    # whole listing, the new-row count over what is written
+    malformed = Observation()
+    catalog = cat.ingest(urls, filter_string, malformed)
+    # dedup against what's already cataloged (idempotent re-ingest)
+    existing = _read_or_none(spark, catalog_path)
+    if existing is not None:
+        catalog = catalog.join(existing.select("url"), "url", "left_anti")
+    n = _write_counted(catalog, catalog_path)
+    return n, _observed(malformed).get("n", 0)
 
 
 def cmd_ingest(args) -> int:
@@ -271,11 +270,8 @@ def cmd_tasker(args) -> int:
     pending = _read_or_none(spark, args.tasks)
     if pending is not None:
         tasks = tasks.join(pending.select("task_hash"), "task_hash", "left_anti")
-    # cache: count + write would execute the template fan-out twice (VERDICT r1)
-    tasks = tasks.cache()
-    n = tasks.count()
-    tasks.write.mode("append").parquet(args.tasks)
-    tasks.unpersist()
+    # the count rides the write: the fan-out runs once, uncached
+    n = _write_counted(tasks, args.tasks)
     print(f"created {n} tasks -> {args.tasks}")
     return 0
 
@@ -286,17 +282,25 @@ def _worker_batch(spark, args, todo) -> tuple[int, int]:
 
     if args.parallelism:
         todo = todo.repartition(args.parallelism)
+    # cached: the tasks have side effects and must run exactly once. The
+    # ledger write materializes the cache and observes both counts
     results = run_tasks(todo, checkpoint_dir=args.checkpoint_dir).cache()
-    done = results.filter(F.col("ok")).select(
-        "task_hash", "stage", F.current_timestamp().alias("completed_at")
+    outcome = Observation()
+    done = (
+        results.observe(
+            outcome, F.count_if("ok").alias("ok"), F.count_if(~F.col("ok")).alias("failed")
+        )
+        .filter(F.col("ok"))
+        .select("task_hash", "stage", F.current_timestamp().alias("completed_at"))
     )
-    failed = results.filter(~F.col("ok")).select(
-        "task_hash", F.col("error"), F.current_timestamp().alias("failed_at"),
-        F.col("stage").alias("failed_stage"),
-    )
-    n_ok, n_fail = done.count(), failed.count()
     done.write.mode("append").parquet(args.ledger)
+    counts = _observed(outcome)
+    n_ok, n_fail = counts.get("ok", 0), counts.get("failed", 0)
     if n_fail:
+        failed = results.filter(~F.col("ok")).select(
+            "task_hash", F.col("error"), F.current_timestamp().alias("failed_at"),
+            F.col("stage").alias("failed_stage"),
+        )
         # idempotent under stream-batch replay (ADVICE r2): a crash
         # between this append and the stream-checkpoint commit re-runs
         # the batch; the ledger anti-join already keeps completed tasks
@@ -359,26 +363,8 @@ def _worker_follow(spark, args) -> int:
         counts["ok"] += n_ok
         counts["fail"] += n_fail
 
-    ckpt = args.follow_checkpoint or f"{args.tasks.rstrip('/')}_stream_ckpt"
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(args.tasks)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-    )
-    interval = getattr(args, "follow_interval", None)
-    writer = (
-        writer.trigger(processingTime=interval)
-        if interval
-        else writer.trigger(availableNow=True)
-    )
-    q = writer.start()
-    duration = getattr(args, "follow_duration", None)
-    if duration is not None:
-        q.awaitTermination(duration)
-        q.stop()
-    q.awaitTermination()
-    mode = f"long-poll every {interval}" if interval else "stream drain"
+    stream = spark.readStream.schema(schema).parquet(args.tasks)
+    mode = _run_stream(stream, process, args.tasks, args)
     print(f"completed {counts['ok']} tasks; quarantined {counts['fail']} ({mode})")
     return 0
 

@@ -235,28 +235,20 @@ try:  # Python Data Source API needs pyspark >= 4.0
         def read(self, partition):
             from pyarrow import fs as pafs
 
+            from chyme_spark.catalog import _file_rows
+
             root = self.root if "://" in self.root else f"file://{self.root}"
             scheme = root.split("://", 1)[0]
             base_depth = root.split("://", 1)[1].rstrip("/").count("/")
-
-            def mtime_ms(i):
-                return i.mtime_ns // 1_000_000 if i.mtime_ns is not None else None
-
             fs, path = _fs_for(partition.prefix, self.s3_opts)
-            if partition.is_file:
-                if self._url_passes(partition.prefix):
-                    info = fs.get_file_info(path)
-                    yield (partition.prefix, info.size, mtime_ms(info))
-                return
-            for i in fs.get_file_info(pafs.FileSelector(path, recursive=True)):
-                if i.type != pafs.FileType.File:
-                    continue
-                depth = i.path.count("/") - base_depth - 1
-                if self.max_depth is not None and depth > self.max_depth:
-                    continue
-                url = f"{scheme}://{i.path}"
-                if self._url_passes(url):
-                    yield (url, i.size, mtime_ms(i))
+            infos = (
+                [fs.get_file_info(path)]
+                if partition.is_file
+                else fs.get_file_info(pafs.FileSelector(path, recursive=True))
+            )
+            for row in _file_rows(infos, scheme, base_depth, self.max_depth):
+                if self._url_passes(row[0]):
+                    yield row
 
     class ListingStreamReader(SimpleDataSourceStreamReader):
         """Streaming face of the lister: each micro-batch emits the

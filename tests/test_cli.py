@@ -137,6 +137,102 @@ def test_ingest_bad_filter_clean_error(spark, tmp_path, capsys):
     assert "unknown filter" in capsys.readouterr().err
 
 
+FAIL_BAD_CMD = 'for f in "$IN"/*; do case "$f" in *bad*) exit 3;; esac; cp "$f" "$OUT/"; done'
+
+
+def _etl_argv(src, t) -> dict[str, list[str]]:
+    return {
+        "ingest": ["ingest", str(src), "--filter", "ext/mov", "--catalog", f"{t}/catalog"],
+        "tasker": [
+            "tasker", "--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger",
+            "--tasks", f"{t}/tasks", "--mirror-base", f"file://{t}/mirror",
+            "--executor", "subprocess", "--cmd", FAIL_BAD_CMD,
+        ],
+        "worker": [
+            "worker", "--tasks", f"{t}/tasks", "--ledger", f"{t}/ledger",
+            "--quarantine", f"{t}/quar",
+        ],
+    }
+
+
+def test_verbs_print_observed_counts(spark, tmp_path, capsys):
+    """The printed counts ride each verb's write as observed metrics:
+    they equal the rows written, re-runs report 0 new, and a failing
+    task is reported and quarantined exactly once."""
+    src = tmp_path / "media"
+    (src / "sub").mkdir(parents=True)
+    for name in ("a.mov", "sub/bad.mov", "skip.log"):
+        (src / name).write_bytes(b"x" * 10)
+    t = tmp_path / "tables"
+    argv = _etl_argv(src, t)
+
+    def run(verb: str, *extra: str) -> str:
+        assert cli.main(argv[verb] + list(extra)) == 0
+        return capsys.readouterr().out
+
+    assert "ingested 2 new resources" in run("ingest")
+    assert "ingested 0 new resources" in run("ingest")
+    assert "ingested 0 new resources" in run("ingest", "--distributed-listing")
+    assert spark.read.parquet(f"{t}/catalog").count() == 2
+    assert "created 2 tasks" in run("tasker")
+    assert "created 0 tasks" in run("tasker")
+    assert spark.read.parquet(f"{t}/tasks").count() == 2
+    assert "completed 1 tasks; quarantined 1" in run("worker")
+    # the failed task re-fails on a re-run but keeps one quarantine row
+    assert "completed 0 tasks; quarantined 1" in run("worker")
+    assert spark.read.parquet(f"{t}/ledger").count() == 1
+    quarantine = spark.read.parquet(f"{t}/quar").collect()
+    assert [r.failed_stage for r in quarantine] == ["execute"]
+
+
+def test_ingest_counts_malformed_and_empty_listing(spark, tmp_path, capsys):
+    """A malformed single-object URL shows in the quarantine count; an
+    empty listing (a plan the optimizer empties, pruning its observed
+    nodes) returns promptly with zero counts and a readable catalog."""
+    import threading
+
+    cat = str(tmp_path / "catalog")
+    assert cli.main(["ingest", "s3://bucket-without-key", "--catalog", cat]) == 0
+    out = capsys.readouterr().out
+    assert "ingested 0 new resources" in out and "(1 malformed skipped)" in out
+    (tmp_path / "empty").mkdir()
+    rc: dict[str, int] = {}
+    th = threading.Thread(target=lambda: rc.setdefault("rc", cli.main(
+        ["ingest", str(tmp_path / "empty"), "--catalog", str(tmp_path / "c2")])))
+    th.start()
+    th.join(timeout=120)
+    assert not th.is_alive() and rc.get("rc") == 0
+    out = capsys.readouterr().out
+    assert "ingested 0 new resources" in out and "(0 malformed skipped)" in out
+    assert spark.read.parquet(str(tmp_path / "c2")).count() == 0
+
+
+def test_etl_verbs_run_few_spark_jobs(spark, tmp_path):
+    """Action-count guard: each verb, labelled with its own job group,
+    runs at most the Spark jobs one observed write needs — a verb that
+    goes back to cache -> count -> write fails here."""
+    src = tmp_path / "media"
+    (src / "sub").mkdir(parents=True)
+    for name in ("a.mov", "sub/b.mov", "skip.log"):
+        (src / name).write_bytes(b"x" * 10)
+    t = tmp_path / "tables"
+    argv = _etl_argv(src, t)
+    sc = spark.sparkContext
+    jobs = {}
+    for verb in ("ingest", "tasker", "worker"):
+        group = f"{verb}-{tmp_path.name}"
+        sc.setJobGroup(group, verb)
+        try:
+            assert cli.main(argv[verb]) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[verb] = len(sc.statusTracker().getJobIdsForGroup(group))
+    # worker: the ledger write also yields the ok/failed counts
+    assert jobs["ingest"] <= 2 and jobs["tasker"] <= 3 and jobs["worker"] <= 5, jobs
+
+
 def test_status_verb(spark, tmp_path, capsys):
     t = tmp_path / "tables"
     src = tmp_path / "m"

@@ -225,7 +225,7 @@ def test_list_files_depth_bound_uri_and_plain_roots(spark, tmp_path):
     (root / "top.mov").write_bytes(b"x")
     (root / "a" / "mid.mov").write_bytes(b"x")
     (root / "a" / "b" / "deep.mov").write_bytes(b"x")
-    for r in (str(root), f"file://{root}"):
+    for r in (str(root), f"file://{root}", f"file:{root}"):
         names = {
             u.rsplit("/", 1)[-1]
             for u in (row["url"] for row in list_files(spark, r, 0).collect())
@@ -236,6 +236,42 @@ def test_list_files_depth_bound_uri_and_plain_roots(spark, tmp_path):
             for u in (row["url"] for row in list_files(spark, r, 1).collect())
         }
         assert names1 == {"top.mov", "mid.mov"}, r
+
+
+def test_list_files_root_forms_give_identical_rows(spark, tmp_path, monkeypatch):
+    """'file:///x', plain '/x', Hadoop's 'file:/x' and a cwd-relative
+    path all list the same (url, size, mtime) rows."""
+    from chyme_spark.catalog import list_files
+
+    root = tmp_path / "tree"
+    (root / "a").mkdir(parents=True)
+    (root / "top.mov").write_bytes(b"xy")
+    (root / "a" / "mid.mov").write_bytes(b"xyz")
+    monkeypatch.chdir(tmp_path)
+    forms = (str(root), f"file://{root}", f"file:{root}", "tree", "./tree/")
+    listed = [{tuple(r) for r in list_files(spark, f).collect()} for f in forms]
+    assert listed[0] == {
+        (f"file://{root}/top.mov", 2, (root / "top.mov").stat().st_mtime_ns // 1_000_000),
+        (f"file://{root}/a/mid.mov", 3, (root / "a" / "mid.mov").stat().st_mtime_ns // 1_000_000),
+    }
+    assert all(rows == listed[0] for rows in listed[1:]), forms
+
+
+def test_list_files_single_file_empty_and_missing_roots(spark, tmp_path):
+    """A file root lists that one file, an empty directory lists
+    nothing, and a missing root raises."""
+    from chyme_spark.catalog import list_files
+
+    one = tmp_path / "one.mov"
+    one.write_bytes(b"x" * 5)
+    for r in (str(one), f"file://{one}"):
+        assert [(u, s) for u, s, _m in list_files(spark, r, 0).collect()] == [
+            (f"file://{one}", 5)
+        ]
+    (tmp_path / "empty").mkdir()
+    assert list_files(spark, str(tmp_path / "empty")).count() == 0
+    with pytest.raises(FileNotFoundError):
+        list_files(spark, str(tmp_path / "missing"))
 
 
 def test_jsonl_sink_commit_idempotent_and_abort_cleans(spark, tmp_path):
